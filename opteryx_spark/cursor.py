@@ -3,23 +3,31 @@
 Reference parity: ``opteryx/cursor.py:39-66,175-239`` (Cursor extends a
 DataFrame with execute/fetchone/description/rowcount) and
 ``opteryx/__init__.py:150-264`` (``query``, ``query_to_arrow``).  Here the
-cursor is a thin wrapper: the plan lives in Spark; fetches pull through
-``toLocalIterator``/Arrow so the driver never materializes more than the
-caller asks for.
+cursor is a thin wrapper: the plan lives in Spark.  ``fetchone`` and
+``fetchmany`` pull through ``toLocalIterator`` so the driver never
+materializes more than the caller asks for; ``fetchall`` returns the rows
+the others have not (one ``collect()`` when nothing was fetched before).
+
+``rowcount`` runs no Spark job once the result has been read in full (by
+``fetchall``, by ``fetchone``/``fetchmany`` reaching the end, or by
+``arrow``/``pandas``); otherwise it runs one ``count()`` and caches it.
+Each ``execute`` and ``close`` clears that result state.
 """
 
 from __future__ import annotations
 
+import itertools
 from collections import namedtuple
 from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StringType, StructField, StructType
 
 from opteryx_spark import rewriter
 from opteryx_spark.session import get_session
 from opteryx_spark.sources import registry as _registry_mod
 from opteryx_spark.sources.registry import SourceRegistry, read_any
-from opteryx_spark.virtual import register_virtual_datasets
+from opteryx_spark.virtual import local_relation, register_virtual_datasets
 
 Description = namedtuple(
     "Description",
@@ -226,7 +234,13 @@ class Cursor:
     def __init__(self, connection: Connection):
         self._conn = connection
         self._df: DataFrame | None = None
+        self._clear_result()
+
+    def _clear_result(self) -> None:
+        # one fetch position shared by every fetch method: the open row
+        # iterator and the rows taken from it; the row count once known
         self._iter = None
+        self._fetched = 0
         self._rowcount: int | None = None
 
     # -- execution ----------------------------------------------------------
@@ -235,6 +249,7 @@ class Cursor:
         from opteryx_spark import errors
 
         spark = self._conn.spark
+        self._clear_result()
         self._conn.statistics["queries_executed"] += 1
         statements = rewriter.split_statements(rewriter.strip_comments(sql))
         if not statements:
@@ -257,8 +272,6 @@ class Cursor:
                 ):
                     raise errors.wrap_spark_error(exc) from exc
                 raise
-        self._iter = None
-        self._rowcount = None
         return self
 
     def _execute_one(self, spark: SparkSession, stmt: str, params) -> DataFrame | None:
@@ -271,8 +284,8 @@ class Cursor:
         show_m = re.match(r"SHOW\s+@(\w+)", stmt, re.IGNORECASE)
         if show_m:
             name = show_m.group(1)
-            return spark.createDataFrame(
-                [(name, str(self._conn.variables.get(name)))], ["name", "value"]
+            return local_relation(
+                spark, [(name, str(self._conn.variables.get(name)))], "name STRING, value STRING"
             )
         # SHOW CREATE VIEW <v> (reference operators/show_create_node.py:40-47:
         # one column named after the view, one row holding its SQL)
@@ -289,7 +302,10 @@ class Cursor:
                 view_sql = folded.get(name.lower())
             if view_sql is None:
                 raise errors.ProgrammingError(f"view not found: {name}")
-            return spark.createDataFrame([(view_sql,)], [name])
+            # a StructType, not DDL: the column is named after the view
+            return local_relation(
+                spark, [(view_sql,)], StructType([StructField(name, StringType())])
+            )
         # SHOW COLUMNS FROM <t> (reference operators/show_columns_node.py)
         cols_m = re.match(
             r"SHOW\s+(?:FULL\s+|EXTENDED\s+)?COLUMNS\s+FROM\s+([\w.$']+)", stmt, re.IGNORECASE
@@ -315,7 +331,8 @@ class Cursor:
             # alias column mirrors the reference's FlatColumn.aliases surface
             amap = _VIRTUAL_COLUMN_ALIASES.get(raw.lstrip("$"), {})
             rev = {canon: [alias] for alias, canon in amap.items()}
-            return spark.createDataFrame(
+            return local_relation(
+                spark,
                 [
                     (f.name, f.dataType.simpleString(), f.nullable, rev.get(f.name, []))
                     for f in df.schema.fields
@@ -518,18 +535,20 @@ class Cursor:
                         break
             for i in range(len(nodes) - 1):
                 lines.append(f"  N{i + 1} --> N{i}")
-            return spark.createDataFrame([("\n".join(lines),)], ["plan"])
+            return local_relation(spark, [("\n".join(lines),)], "plan STRING")
         if analyze:
             rows = [
                 (d, op, cfg, 0.0, 0, 0, 1)  # per-node metrics are engine-internal
                 for d, op, cfg in nodes
             ]
-            return spark.createDataFrame(
+            return local_relation(
+                spark,
                 rows,
                 "tree INT, operator STRING, config STRING, time_ms DOUBLE, "
                 "records_in BIGINT, records_out BIGINT, calls BIGINT",
             )
-        return spark.createDataFrame(
+        return local_relation(
+            spark,
             [(d, op, cfg) for d, op, cfg in nodes],
             "tree INT, operator STRING, config STRING",
         )
@@ -607,46 +626,54 @@ class Cursor:
 
     @property
     def rowcount(self) -> int:
+        """Rows in the result: known without a Spark job once the result
+        has been read in full, else one ``count()``, cached."""
         if self._rowcount is None:
             self._rowcount = self.df.count()
         return self._rowcount
 
     def fetchone(self):
-        if self._iter is None:
-            self._iter = self.df.toLocalIterator()
-        try:
-            return tuple(next(self._iter))
-        except StopIteration:
-            return None
+        rows = self.fetchmany(1)
+        return rows[0] if rows else None
 
     def fetchmany(self, size: int | None = None):
         size = size or self.arraysize
-        out = []
-        for _ in range(size):
-            row = self.fetchone()
-            if row is None:
-                break
-            out.append(row)
+        if self._iter is None:
+            self._iter = self.df.toLocalIterator()
+        out = [tuple(r) for r in itertools.islice(self._iter, size)]
+        self._fetched += len(out)
+        if len(out) < size:
+            self._rowcount = self._fetched
         return out
 
     def fetchall(self):
-        return [tuple(r) for r in self.df.collect()]
+        """The rows not yet fetched (PEP 249)."""
+        if self._iter is None:
+            out = [tuple(r) for r in self.df.collect()]
+            self._iter = iter(())
+        else:
+            out = [tuple(r) for r in self._iter]
+        self._fetched += len(out)
+        self._rowcount = self._fetched
+        return out
 
     def arrow(self):
-        """Results as a pyarrow.Table (reference ``execute_to_arrow``)."""
-        df = self.df
-        if hasattr(df, "toArrow"):
-            return df.toArrow()
-        import pyarrow as pa
-
-        return pa.Table.from_pandas(df.toPandas())
+        """The whole result as a pyarrow.Table (reference
+        ``execute_to_arrow``), whatever the fetch position."""
+        table = self.df.toArrow()
+        self._rowcount = table.num_rows
+        return table
 
     def pandas(self):
-        return self.df.toPandas()
+        """The whole result as a pandas DataFrame, whatever the fetch
+        position."""
+        frame = self.df.toPandas()
+        self._rowcount = len(frame)
+        return frame
 
     def close(self) -> None:
         self._df = None
-        self._iter = None
+        self._clear_result()
 
 
 import re as _re2

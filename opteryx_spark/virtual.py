@@ -14,12 +14,14 @@ reference's own shape-battery statements run unchanged here
   value-predicate queries match, not just shapes.
 - ``$satellites`` (177×8), ``$astronauts`` (357×19), ``$missions``
   (4630×8): the same sample datasets the reference ships, packaged as
-  parquet under ``opteryx_spark/data/`` — value-dependent queries match,
-  not just shapes.  Attested licenses differ per dataset (see the
-  reference's own provenance notes): astronauts is CC0 (Kaggle NASA
-  astronaut yearbook, ``astronaut_data.py:15-18``); satellites is "MIT
-  Licences attested, but data appears to be from NASA, which is Public
-  Domain" (``satellite_data.py``); missions cites a Kaggle dataset
+  parquet under ``opteryx_spark/data/`` and read into driver memory once,
+  when the views are registered (queries never scan the files) —
+  value-dependent queries match, not just shapes.  Attested licenses
+  differ per dataset (see the reference's own provenance notes):
+  astronauts is CC0 (Kaggle NASA astronaut yearbook,
+  ``astronaut_data.py:15-18``); satellites is "MIT Licences attested, but
+  data appears to be from NASA, which is Public Domain"
+  (``satellite_data.py``); missions cites a Kaggle dataset
   (``missions.py:15``) with no explicit license attestation in the
   reference.
 - ``$variables`` (43×5) exposes the MySQL-compatible system-variable
@@ -28,7 +30,8 @@ reference's own shape-battery statements run unchanged here
   counters, ``$stop_words`` (305×1) a common-English stopword list.
 
 Relations register as ``virtual_<name>`` temp views; the dialect rewriter
-maps ``$name`` → ``virtual_<name>``.
+maps ``$name`` → ``virtual_<name>``.  Each is a ``LocalRelation`` built
+by :func:`local_relation`, so no query over one scans an RDD.
 """
 
 from __future__ import annotations
@@ -37,7 +40,11 @@ import datetime
 import getpass
 import os
 
-from pyspark.sql import SparkSession
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import from_arrow_schema, to_arrow_schema
+from pyspark.sql.types import StructType
 
 _D = datetime.date
 _T = datetime.datetime
@@ -97,13 +104,13 @@ PLANET_DISCOVERY_CUTOFFS = (
 _DATA_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "data")
 
 
-def _load_packaged(spark: SparkSession, name: str):
-    df = spark.read.parquet(os.path.join(_DATA_DIR, f"{name}.parquet"))
-    # normalize any NTZ inference back to the reference's TIMESTAMP surface
-    for field, dtype in df.dtypes:
-        if dtype == "timestamp_ntz":
-            df = df.withColumn(field, df[field].cast("timestamp"))
-    return df
+def _load_packaged(spark: SparkSession, name: str) -> DataFrame:
+    # ParquetFile, not read_table: read_table loads pyarrow.dataset, ~4 MB
+    # more resident memory for three small files
+    table = pq.ParquetFile(os.path.join(_DATA_DIR, f"{name}.parquet")).read()
+    # from_arrow_schema maps zone-less timestamps to TIMESTAMP (not
+    # TIMESTAMP_NTZ): the reference's timestamp surface
+    return local_relation(spark, table, from_arrow_schema(table.schema))
 
 
 # --- $stop_words: 305 common English words ----------------------------------
@@ -190,14 +197,35 @@ _SYSTEM_VARIABLES: dict[str, tuple[str, object, str, str]] = {
 }
 
 
+def local_relation(
+    spark: SparkSession, rows: pa.Table | list[tuple], schema: StructType | str
+) -> DataFrame:
+    """Small driver-side rows as a DataFrame over a ``LocalRelation``.
+
+    ``rows`` is a pyarrow.Table or a list of tuples; ``schema`` is a
+    StructType or a DDL string.  The rows travel inside the plan, so
+    Catalyst can fold filters and projections over them, often into a
+    result computed on the driver; ``createDataFrame(list)`` instead plans
+    a ``Scan ExistingRDD`` that runs a task per core on every query.
+    """
+    if isinstance(schema, str):
+        schema = StructType.fromDDL(schema)
+    if not isinstance(rows, pa.Table):
+        arrow_schema = to_arrow_schema(schema)
+        rows = pa.Table.from_pylist(
+            [dict(zip(arrow_schema.names, row)) for row in rows], schema=arrow_schema
+        )
+    return spark.createDataFrame(rows, schema)
+
+
 def register_virtual_datasets(spark: SparkSession) -> None:
     """Register the static virtual relations (once per session)."""
-    spark.createDataFrame(_PLANETS, _PLANET_SCHEMA).createOrReplaceTempView("virtual_planets")
+    local_relation(spark, _PLANETS, _PLANET_SCHEMA).createOrReplaceTempView("virtual_planets")
     # $no_table: one row, one column (reference no_table_data.py:27-32)
-    spark.createDataFrame([(0,)], "`$column` BIGINT").createOrReplaceTempView("virtual_no_table")
+    local_relation(spark, [(0,)], "`$column` BIGINT").createOrReplaceTempView("virtual_no_table")
     for _name in ("satellites", "astronauts", "missions"):
         _load_packaged(spark, _name).createOrReplaceTempView(f"virtual_{_name}")
-    spark.createDataFrame([(w,) for w in _STOP_WORDS], "value STRING").createOrReplaceTempView(
+    local_relation(spark, [(w,) for w in _STOP_WORDS], "value STRING").createOrReplaceTempView(
         "virtual_stop_words"
     )
     register_session_state(spark, {}, {})
@@ -227,8 +255,8 @@ def register_session_state(
             var_rows.append(
                 (name, str(value), type(value).__name__.upper(), "user", "unrestricted")
             )
-    spark.createDataFrame(
-        var_rows, "name STRING, value STRING, type STRING, owner STRING, visibility STRING"
+    local_relation(
+        spark, var_rows, "name STRING, value STRING, type STRING, owner STRING, visibility STRING"
     ).createOrReplaceTempView("virtual_variables")
 
     stat_defaults = {
@@ -241,7 +269,7 @@ def register_session_state(
     }
     merged = {**stat_defaults, **{k: v for k, v in statistics.items() if k in stat_defaults}}
     stat_rows = [(k, str(v)) for k, v in merged.items()]
-    spark.createDataFrame(stat_rows, "key STRING, value STRING").createOrReplaceTempView(
+    local_relation(spark, stat_rows, "key STRING, value STRING").createOrReplaceTempView(
         "virtual_statistics"
     )
 
@@ -252,6 +280,6 @@ def register_session_state(
     user_rows = [("name", username, "VARCHAR")] + [
         ("membership", m, "VARCHAR") for m in (memberships or [])
     ]
-    spark.createDataFrame(
-        user_rows, "attribute STRING, value STRING, type STRING"
+    local_relation(
+        spark, user_rows, "attribute STRING, value STRING, type STRING"
     ).createOrReplaceTempView("virtual_user")
