@@ -4,6 +4,11 @@ Prints ONE JSON line:
   {"metric": "...", "value": <total sec>, "unit": "sec",
    "queries": {name: sec, ...}, "sf": <sf>}
 
+An entry that raises is listed under "failed" ({"entry", "error",
+"message"}); the other entries are still measured and the process exits 1.
+Every timed run owns its caches (``persist_scope()``), declared as
+``_scoped`` in the protocol string.
+
 Times are steady-state query execution (session boot + first-query JVM
 warmup excluded via a warmup run), which is the comparable number against
 the reference's single-node steady-state throughput (BASELINE.md notes the
@@ -18,6 +23,7 @@ import os
 import shutil
 import sys
 import time
+import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -266,7 +272,6 @@ def _split_defs(spark, sf_dir, work):
         curate.curate_rewrite_corpus(base.unionByName(copies)).write.mode(
             "overwrite"
         ).parquet(f"{work}/curate_rewritten")
-        D.release_text_group_caches()
 
     def cur_probe():
         return curate.curate_gate_outcomes(
@@ -280,7 +285,7 @@ def _split_defs(spark, sf_dir, work):
     }
 
 
-def _time_split(spark, sf_dir, names, runs):
+def _time_split(spark, sf_dir, names, runs, failed):
     """Time artifact-backed entries as build + probe, separately.
 
     State protocol (VERDICT r10 #3 — pinned so the numbers are
@@ -294,14 +299,12 @@ def _time_split(spark, sf_dir, names, runs):
     (through r10 it was a single cold rep, which is why build numbers
     step down slightly in r11 and carried no spread).  A probe may
     assume warm: (a) the artifact parquet written above (page cache),
-    (b) JVM/codegen from the build and its own untimed warmup rep, and
-    (c) the operator-internal `_track_persist` caches its FIRST
-    invocation populated (repeated identical persists alias one cache
-    entry — the r10 registry fix).  A probe may NOT assume any cache
-    populated by a different entry; builds start from the suite tables
-    only."""
+    (b) JVM/codegen from the build and its own untimed warmup rep.  Every
+    build and probe rep runs in its own ``persist_scope()`` (declared
+    ``_scoped`` protocol), so no rep reads a cache an earlier rep or a
+    different entry populated; builds start from the suite tables only.
+    A failing build is recorded in ``failed`` and its probe is skipped."""
     import shutil
-    import statistics
     import tempfile
     import types as _types
 
@@ -314,49 +317,20 @@ def _time_split(spark, sf_dir, names, runs):
         probe_reg = {}
         for name in names:
             build, probe = defs[name]
-            if runs > 1:
-                build()  # untimed warmup: page-cache fill + codegen
-            bsamples = []
-            for _ in range(max(1, runs)):
-                start = time.perf_counter()
-                build()
-                bsamples.append(time.perf_counter() - start)
-            bmed = statistics.median(bsamples)
-            if runs > 1:
-                # same spread-escalation idea as _time_queries, capped at
-                # 7 reps (builds are the most expensive timed units); if
-                # still noisy, record the quietest contiguous 3-rep window
-                for extra in (2, 2):
-                    if not bmed or _spread(bsamples, bmed) <= 0.35:
-                        break
-                    for _ in range(extra):
-                        start = time.perf_counter()
-                        build()
-                        bsamples.append(time.perf_counter() - start)
-                    bmed = statistics.median(bsamples)
-                if bmed and _spread(bsamples, bmed) > 0.35 and len(bsamples) >= 5:
-                    best = None
-                    for i in range(len(bsamples) - 2):
-                        win = bsamples[i : i + 3]
-                        wmed = statistics.median(win)
-                        wsp = _spread(win, wmed)
-                        if best is None or wsp < best[1]:
-                            best = (wmed, wsp)
-                    bmed = best[0]
-                    b_spreads[name] = best[1]
-                else:
-                    b_spreads[name] = _spread(bsamples, bmed)
-            else:
-                b_spreads[name] = _spread(bsamples, bmed)
-            builds[name] = round(bmed, 3)
-            b_ns[name] = len(bsamples)
+            try:
+                builds[name], b_spreads[name], b_ns[name] = _measure_build(
+                    lambda b=build: _scoped(b), runs
+                )
+            except Exception as exc:  # noqa: BLE001 — recorded, run continues
+                failed.append(_failure(f"{name}_build", exc))
+                continue
             probe_reg[name] = _types.SimpleNamespace(
                 spark=lambda s, d, p=probe: p()
             )
         timings, spreads, n_samples = _time_queries(
-            probe_reg, spark, sf_dir, names, runs
+            probe_reg, spark, sf_dir, list(probe_reg), runs, failed
         )
-        for name in names:
+        for name in probe_reg:
             spreads[f"{name}_build"] = b_spreads[name]
             n_samples[f"{name}_build"] = b_ns[name]
         return builds, timings, spreads, n_samples
@@ -364,7 +338,42 @@ def _time_split(spark, sf_dir, names, runs):
         shutil.rmtree(work, ignore_errors=True)
 
 
-def _batched_total(spark, reg, sf_dir, names, workers=3):
+def _measure_build(build, runs):
+    """(median, spread, sample count) of an artifact build: one untimed
+    warmup when ``runs > 1``, ``runs`` timed reps, then the same
+    spread-escalation idea as :func:`_measure`, capped at 7 reps (builds
+    are the most expensive timed units); if still noisy, the quietest
+    contiguous 3-rep window is recorded."""
+    import statistics
+
+    if runs > 1:
+        build()  # untimed warmup: page-cache fill + codegen
+    bsamples = []
+    for _ in range(max(1, runs)):
+        bsamples.append(_timed(build))
+    bmed = statistics.median(bsamples)
+    sp = _spread(bsamples, bmed)
+    if runs > 1:
+        for extra in (2, 2):
+            if not bmed or _spread(bsamples, bmed) <= 0.35:
+                break
+            for _ in range(extra):
+                bsamples.append(_timed(build))
+            bmed = statistics.median(bsamples)
+        sp = _spread(bsamples, bmed)
+        if bmed and sp > 0.35 and len(bsamples) >= 5:
+            best = None
+            for i in range(len(bsamples) - 2):
+                win = bsamples[i : i + 3]
+                wmed = statistics.median(win)
+                wsp = _spread(win, wmed)
+                if best is None or wsp < best[1]:
+                    best = (wmed, wsp)
+            bmed, sp = best
+    return round(bmed, 3), sp, len(bsamples)
+
+
+def _batched_total(spark, reg, sf_dir, names, failed, workers=3):
     """Wall-clock seconds to execute EVERY entry's workload once, submitted
     from a small thread pool (guide §2.6 overlapping of independent jobs).
 
@@ -378,7 +387,10 @@ def _batched_total(spark, reg, sf_dir, names, workers=3):
     beyond what the serial protocol already allows, and the serial
     per-entry medians (the `queries` map) are measured exactly as before.
     Entries are warm (the serial phase just ran them), matching the
-    steady-state framing of every other number.
+    steady-state framing of every other number.  Each worker runs each
+    entry in its own ``persist_scope()`` (pool threads start with an empty
+    context), so one entry's release never touches another's blocks; a
+    failing entry is recorded in ``failed`` and the pass continues.
     """
     import shutil as _shutil
     import tempfile
@@ -388,14 +400,20 @@ def _batched_total(spark, reg, sf_dir, names, workers=3):
     try:
         defs = _split_defs(spark, sf_dir, work)
 
-        def run_one(name):
-            spark.sparkContext.setJobDescription(f"batched: {name}")
+        def run_entry(name):
             if name in defs:
                 build, probe = defs[name]
                 build()
                 probe().collect()
             else:
                 reg[name].spark(spark, sf_dir).collect()
+
+        def run_one(name):
+            spark.sparkContext.setJobDescription(f"batched: {name}")
+            try:
+                _scoped(lambda: run_entry(name))
+            except Exception as exc:  # noqa: BLE001 — recorded, pass continues
+                failed.append(_failure(f"batched:{name}", exc))
 
         start = time.perf_counter()
         with ThreadPoolExecutor(max_workers=workers) as pool:
@@ -422,77 +440,105 @@ def _spread(samples, med, trim=None):
     return round((s[-1] - s[0]) / med, 3) if med else 0.0
 
 
-def _time_queries(reg, spark, sf_dir, names, runs):
-    """Per-query median over ``runs`` timed executions (median, not best:
-    the recorded number must be reproducible, not optimistic) plus the
-    run-to-run spread and sample count.  Entries whose spread stays above
-    35% escalate 3 -> 5 -> 9 samples so one outlier cannot own the number
-    (threshold was 50% through r6; VERDICT r6 #6 asks for no headline
-    entry sitting above 0.35 spread without escalation)."""
-    import statistics
+def _scoped(fn):
+    """``fn()`` — one registry entry run, or one split build or probe,
+    materialized inside — in its own ``persist_scope()``: every cache and
+    checkpoint the run creates is released when it returns, so no timed
+    run reads another run's caches and no run's release can touch blocks
+    a concurrent run still needs."""
+    from opteryx_spark.operators.lifetime import persist_scope
 
+    with persist_scope():
+        return fn()
+
+
+def _timed(fn) -> float:
+    start = time.perf_counter()
+    fn()
+    return time.perf_counter() - start
+
+
+def _failure(entry, exc) -> dict:
+    """One ``failed`` record: the entry, the error type and the first line
+    of its message (the traceback goes to stderr)."""
+    traceback.print_exc(file=sys.stderr)
+    msg = (str(exc).strip().splitlines() or [""])[0]
+    return {"entry": entry, "error": type(exc).__name__, "message": msg[:160]}
+
+
+def _time_queries(reg, spark, sf_dir, names, runs, failed, warmup=1):
+    """Per-query median/spread/sample count (see :func:`_measure`); each
+    run is one scoped ``.collect()``.  A failing entry is recorded in
+    ``failed`` and the remaining entries are still measured."""
     timings: dict[str, float] = {}
     spreads: dict[str, float] = {}
     n_samples: dict[str, int] = {}
     for name in names:
         if name not in reg:
             continue
-        # one untimed warmup pays the per-query codegen compile, so the
-        # timed samples measure steady-state execution and the recorded
-        # spread reflects real run-to-run variance, not compilation
-        reg[name].spark(spark, sf_dir).collect()
-        samples = []
-        for _ in range(runs):
-            start = time.perf_counter()
-            reg[name].spark(spark, sf_dir).collect()
-            samples.append(time.perf_counter() - start)
-        med = statistics.median(samples)
-        if runs > 1:
-            for extra in (2, 4):  # escalate to 5, then 9 samples
-                if not med or _spread(samples, med) <= 0.35:
-                    break
-                for _ in range(extra):
-                    start = time.perf_counter()
-                    reg[name].spark(spark, sf_dir).collect()
-                    samples.append(time.perf_counter() - start)
-                med = statistics.median(samples)
-        if len(samples) >= 9 and med and _spread(samples, med) > 0.35:
-            # high spread that survives 9 samples is JIT warm-up drift, not
-            # noise (measured: monotonic 0.94s -> 0.44s on q1) — the number
-            # that predicts production is the steady-state tail, so record
-            # median/spread over the LAST 5 samples (documented protocol;
-            # n_samples still reports the full count)
-            tail = samples[-5:]
-            med = statistics.median(tail)
-            sp = _spread(tail, med)
-            if sp > 0.35:
-                # FINAL stage (VERDICT r7 #3: cdc_snapshot_diff recorded
-                # 0.841 because 5 tail samples still admit two extremes on
-                # a sub-second query under co-tenant load): take 6 more
-                # samples (15 total) and record the QUIETEST CONTIGUOUS
-                # 5-run window — co-tenant load arrives in waves, so the
-                # tightest consecutive stretch is the least-contended
-                # steady state (every sample is a real run; a tail or
-                # symmetric trim still straddles a load wave, measured
-                # 0.835 trimmed spread during one)
-                for _ in range(6):
-                    start = time.perf_counter()
-                    reg[name].spark(spark, sf_dir).collect()
-                    samples.append(time.perf_counter() - start)
-                best_med, best_sp = med, sp
-                for i in range(len(samples) - 4):
-                    win = samples[i : i + 5]
-                    wmed = statistics.median(win)
-                    wsp = _spread(win, wmed)
-                    if wsp < best_sp:
-                        best_med, best_sp = wmed, wsp
-                med, sp = best_med, best_sp
-            spreads[name] = sp
-        else:
-            spreads[name] = _spread(samples, med)
-        timings[name] = round(med, 3)
-        n_samples[name] = len(samples)
+        q = reg[name]
+        try:
+            timings[name], spreads[name], n_samples[name] = _measure(
+                lambda q=q: _scoped(lambda: q.spark(spark, sf_dir).collect()),
+                runs,
+                warmup,
+            )
+        except Exception as exc:  # noqa: BLE001 — recorded, run continues
+            failed.append(_failure(name, exc))
     return timings, spreads, n_samples
+
+
+def _measure(run, runs, warmup=1):
+    """(median, spread, sample count) over ``runs`` timed executions
+    (median, not best: the recorded number must be reproducible, not
+    optimistic).  Runs whose spread stays above 35% escalate 3 -> 5 -> 9
+    samples so one outlier cannot own the number (threshold was 50%
+    through r6; VERDICT r6 #6 asks for no headline entry sitting above
+    0.35 spread without escalation)."""
+    import statistics
+
+    # untimed warmup pays the per-query codegen compile, so the timed
+    # samples measure steady-state execution and the recorded spread
+    # reflects real run-to-run variance, not compilation
+    for _ in range(warmup):
+        run()
+    samples = [_timed(run) for _ in range(runs)]
+    med = statistics.median(samples)
+    if runs > 1:
+        for extra in (2, 4):  # escalate to 5, then 9 samples
+            if not med or _spread(samples, med) <= 0.35:
+                break
+            samples += [_timed(run) for _ in range(extra)]
+            med = statistics.median(samples)
+    if len(samples) >= 9 and med and _spread(samples, med) > 0.35:
+        # high spread that survives 9 samples is JIT warm-up drift, not
+        # noise (measured: monotonic 0.94s -> 0.44s on q1) — the number
+        # that predicts production is the steady-state tail, so record
+        # median/spread over the LAST 5 samples (documented protocol;
+        # n_samples still reports the full count)
+        tail = samples[-5:]
+        med = statistics.median(tail)
+        sp = _spread(tail, med)
+        if sp > 0.35:
+            # FINAL stage (VERDICT r7 #3: cdc_snapshot_diff recorded
+            # 0.841 because 5 tail samples still admit two extremes on
+            # a sub-second query under co-tenant load): take 6 more
+            # samples (15 total) and record the QUIETEST CONTIGUOUS
+            # 5-run window — co-tenant load arrives in waves, so the
+            # tightest consecutive stretch is the least-contended
+            # steady state (every sample is a real run; a tail or
+            # symmetric trim still straddles a load wave, measured
+            # 0.835 trimmed spread during one)
+            samples += [_timed(run) for _ in range(6)]
+            for i in range(len(samples) - 4):
+                win = samples[i : i + 5]
+                wmed = statistics.median(win)
+                wsp = _spread(win, wmed)
+                if wsp < sp:
+                    med, sp = wmed, wsp
+    else:
+        sp = _spread(samples, med)
+    return round(med, 3), sp, len(samples)
 
 
 def main() -> None:
@@ -507,7 +553,10 @@ def main() -> None:
     reg = load_all()
 
     # warmup: boot codegen/shuffle machinery on a small query
-    reg["tpch_q6_forecast_revenue"].spark(spark, SF_DIR).collect()
+    _scoped(lambda: reg["tpch_q6_forecast_revenue"].spark(spark, SF_DIR).collect())
+    # entries that raise are recorded here (entry, error type, message),
+    # the rest are still measured, and the run exits non-zero
+    failed: list[dict] = []
 
     # self-heal a missing .data/sf1 (gitignored; round transitions clean
     # untracked files) so the graded sf1 q1 headline never silently
@@ -541,8 +590,8 @@ def main() -> None:
     # implicitly inside the three samples' spread; BASELINE.md's reference
     # number is likewise steady-state single-node throughput)
     plain = [n for n in BENCH_QUERIES if n not in SPLIT_QUERIES]
-    timings, spreads, n_samples = _time_queries(reg, spark, SF_DIR, plain, runs=3)
-    builds, p_t, p_sp, p_ns = _time_split(spark, SF_DIR, SPLIT_QUERIES, runs=3)
+    timings, spreads, n_samples = _time_queries(reg, spark, SF_DIR, plain, 3, failed)
+    builds, p_t, p_sp, p_ns = _time_split(spark, SF_DIR, SPLIT_QUERIES, 3, failed)
     timings.update(p_t)
     spreads.update(p_sp)
     n_samples.update(p_ns)
@@ -551,7 +600,7 @@ def main() -> None:
 
     # r9 surface, separate subtotal (legacy total stays comparable)
     new_t, new_sp, new_ns = _time_queries(
-        reg, spark, SF_DIR, NEW_BENCH_QUERIES, runs=3
+        reg, spark, SF_DIR, NEW_BENCH_QUERIES, 3, failed
     )
     spreads.update(new_sp)
     n_samples.update(new_ns)
@@ -577,7 +626,7 @@ def main() -> None:
         _round = 0
     start_i = (_round * 15) % len(pool) if pool else 0
     spot_names = (pool + pool)[start_i : start_i + 15]
-    spot_t, spot_sp, spot_ns = _time_queries(reg, spark, SF_DIR, spot_names, runs=1)
+    spot_t, spot_sp, spot_ns = _time_queries(reg, spark, SF_DIR, spot_names, 1, failed)
     spreads.update(spot_sp)
     n_samples.update(spot_ns)
 
@@ -590,7 +639,7 @@ def main() -> None:
     # in `queries`) is kept alongside as `value_serial_sum` for
     # round-over-round comparison.
     serial_sum = round(sum(timings.values()), 3)
-    batched = _batched_total(spark, reg, SF_DIR, BENCH_QUERIES, workers=3)
+    batched = _batched_total(spark, reg, SF_DIR, BENCH_QUERIES, failed, workers=3)
 
     sf = SF_DIR.rstrip("/").rsplit("sf", 1)[-1]
     out = {
@@ -607,7 +656,7 @@ def main() -> None:
         "protocol": (
             "median_of_3_escalate_15_quietwin5_thresh35_splitbuild_warm3_"
             "headline9_spotlight1_sf1med3_value_batched3wall_serialsum_kept_"
-            "arrow3added"
+            "arrow3added_scoped"
         ),
         "spread": spreads,
         "n_samples": n_samples,
@@ -626,9 +675,9 @@ def main() -> None:
         # on a hot driver machine 3 samples let one contended run own
         # the median).
         q1 = "tpch_q1_pricing_summary"
-        for _ in range(6):
-            reg[q1].spark(spark, SF1_DIR).collect()
-        sf1_head, h_sp, h_ns = _time_queries(reg, spark, SF1_DIR, [q1], runs=9)
+        sf1_head, h_sp, h_ns = _time_queries(
+            reg, spark, SF1_DIR, [q1], 9, failed, warmup=7
+        )
         sf1_head_meta = {"spread": h_sp, "n_samples": h_ns}
         sf1_plain = [
             n for n in SF1_QUERIES if n not in SPLIT_QUERIES and n not in sf1_head
@@ -641,10 +690,10 @@ def main() -> None:
         # sample let a single contended run own high-variance entries
         # (dedup_fuzzy_keepers / dedup_minhash_incremental).
         sf1_sp: dict[str, float] = dict(h_sp)
-        sf1_t, p_sp1, p_ns1 = _time_queries(reg, spark, SF1_DIR, sf1_plain, runs=3)
+        sf1_t, p_sp1, p_ns1 = _time_queries(reg, spark, SF1_DIR, sf1_plain, 3, failed)
         sf1_ns.update(p_ns1)
         sf1_sp.update(p_sp1)
-        sf1_b, sf1_p, s_sp1, s_ns1 = _time_split(spark, SF1_DIR, sf1_split, runs=3)
+        sf1_b, sf1_p, s_sp1, s_ns1 = _time_split(spark, SF1_DIR, sf1_split, 3, failed)
         sf1_ns.update(s_ns1)
         sf1_sp.update(s_sp1)
         sf1_t.update(sf1_p)
@@ -655,7 +704,7 @@ def main() -> None:
         # q1/q3/q18 reuse the SF1_QUERIES measurements already taken
         # above rather than paying a second run.
         tpch_todo = [n for n in SF1_TPCH if n not in sf1_t]
-        sf1_tpch, _, t_ns1 = _time_queries(reg, spark, SF1_DIR, tpch_todo, runs=1)
+        sf1_tpch, _, t_ns1 = _time_queries(reg, spark, SF1_DIR, tpch_todo, 1, failed)
         sf1_ns.update(t_ns1)
         sf1_tpch.update({n: sf1_t[n] for n in SF1_TPCH if n in sf1_t})
         # r12 (VERDICT r11 #2, guide §4): the corpus-output sf1 entries are
@@ -675,13 +724,16 @@ def main() -> None:
             "feat_hashed_tokens",
             "events_rolling_window",
         ):
-            reg[name].spark(spark, SF1_DIR).toArrow()  # untimed warmup
-            _samples = []
-            for _ in range(3):
-                start = time.perf_counter()
-                reg[name].spark(spark, SF1_DIR).toArrow()
-                _samples.append(time.perf_counter() - start)
-            arrow_t[name] = round(_stats.median(_samples), 3)
+            q = reg[name]
+
+            def run(q=q):
+                _scoped(lambda: q.spark(spark, SF1_DIR).toArrow())
+
+            try:
+                run()  # untimed warmup
+                arrow_t[name] = round(_stats.median([_timed(run) for _ in range(3)]), 3)
+            except Exception as exc:  # noqa: BLE001 — recorded, run continues
+                failed.append(_failure(f"{name}_arrow", exc))
         out["sf1"] = {
             "total": round(sum(sf1_t.values()), 3),
             "queries": sf1_t,
@@ -698,6 +750,8 @@ def main() -> None:
             # runs=1 sweep entries; read tpch_total accordingly)
             "n_samples": sf1_ns,
         }
+    if failed:
+        out["failed"] = failed
     # Three copies: BENCH.json (gitignored, judge-on-machine) and
     # BENCH_FULL.json (tracked — committed per round so the full record
     # survives the round transition) get everything; STDOUT gets a slim
@@ -724,6 +778,8 @@ def main() -> None:
         slim["sf1_total"] = out["sf1"]["total"]
         slim["sf1_tpch_total"] = out["sf1"]["tpch_total"]
         slim["sf1_arrow_total"] = out["sf1"]["arrow_total"]
+    if failed:
+        slim["failed"] = failed
     line = json.dumps(slim, separators=(",", ":"))
     if len(line) > 2000:  # first fallback: 1-decimal per-query detail
         slim["queries"] = {k: round(v, 1) for k, v in timings.items()}
@@ -733,6 +789,8 @@ def main() -> None:
         line = json.dumps(slim, separators=(",", ":"))
     print(line)
     spark.stop()
+    if failed:
+        sys.exit(1)
 
 
 if __name__ == "__main__":

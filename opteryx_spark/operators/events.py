@@ -28,6 +28,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from opteryx_spark.operators.lifetime import checkpoint, persist
+
 __all__ = [
     "assign_sessions",
     "sessionize",
@@ -318,9 +320,7 @@ def gap_fill_series(
     # the aggregate feeds both the spine bounds and the fill join —
     # persist the (bucket-cardinality-sized) frame instead of scanning
     # the event stream twice
-    from opteryx_spark.operators.dedup import _track_persist
-
-    actual = _track_persist(actual)
+    actual = persist(actual)
     spine = (
         actual.groupBy(group_col)
         .agg(F.min("bucket_start").alias("_lo"), F.max("bucket_start").alias("_hi"))
@@ -842,9 +842,8 @@ def dau_wau_stickiness(
         F.col(user_col).alias("_u"),
         F.to_date(F.col(ts_col).cast("timestamp")).alias("_d"),
     ).distinct()
-    from opteryx_spark.operators.dedup import _track_persist
 
-    ud = _track_persist(ud)
+    ud = persist(ud)
     dau = ud.groupBy(F.col("_d").alias("day")).agg(
         F.count(F.lit(1)).alias("dau")
     )
@@ -1056,9 +1055,8 @@ def new_vs_returning(
     ``new_share_ppm`` (BIGINT, of that day's actives).
     """
     base = events.filter(F.col(user_col).isNotNull() & F.col(ts_col).isNotNull())
-    from opteryx_spark.operators.dedup import _track_persist
 
-    ud = _track_persist(
+    ud = persist(
         base.select(
             F.col(user_col).alias("_u"),
             F.to_date(F.col(ts_col).cast("timestamp")).alias("_d"),
@@ -1718,8 +1716,6 @@ def removal_effect_attribution(
     )
     counts = pairs.groupBy("fi", "tj").agg(F.count(F.lit(1)).alias("c"))
 
-    from opteryx_spark.operators.dedup import _checkpoint_tracked, _track_release
-
     # Everything below the counts aggregate is arithmetic on the transition
     # matrix, whose size is O(|channel vocabulary|^2) rows no matter how big
     # the corpus is.  Collect it ONCE and run the exact integer scenario
@@ -1729,10 +1725,10 @@ def removal_effect_attribution(
     # vocabulary (beyond the cap) falls back to the all-scenarios-at-once
     # distributed loop, which is also the equivalence witness
     # (tests/test_removal_equivalence.py).
-    counts, c_h = _checkpoint_tracked(counts)
+    counts, c_h = checkpoint(counts)
     head = counts.limit(_RE_MAX_DRIVER_TRANSITIONS + 1).collect()
     if len(head) <= _RE_MAX_DRIVER_TRANSITIONS:
-        _track_release(c_h)
+        c_h.unpersist()  # the result is built from the collected rows
         rows = _removal_effect_exact(
             [(r["fi"], r["tj"], int(r["c"])) for r in head], rounds, PPM
         )
@@ -1741,9 +1737,7 @@ def removal_effect_attribution(
             "channel string, p_full_ppm long, p_removed_ppm long, "
             "removal_effect_ppm long, share_ppm long",
         )
-    out = _removal_effect_spark_loop(counts, rounds, PPM)
-    _track_release(c_h)
-    return out
+    return _removal_effect_spark_loop(counts, rounds, PPM)
 
 
 # Transition-matrix cap for the driver-exact route: ~40 channels' worth of
@@ -1852,9 +1846,8 @@ def _removal_effect_spark_loop(
             "p_ppm"
         ),
     )
-    from opteryx_spark.operators.dedup import _checkpoint_tracked, _track_release
 
-    p, p_h = _checkpoint_tracked(p)
+    p, p_h = checkpoint(p)
     # v(state) = P(absorb in CONV within remaining rounds), per scenario
     v = p.select("removed", F.col("tj").alias("state")).unionAll(
         p.select("removed", F.col("fi").alias("state"))
@@ -1865,7 +1858,7 @@ def _removal_effect_spark_loop(
         .otherwise(F.lit(0).cast("long"))
         .alias("v"),
     )
-    v, handle = _checkpoint_tracked(v)
+    v, handle = checkpoint(v)
     for _ in range(rounds):
         stepped = (
             p.join(
@@ -1889,7 +1882,7 @@ def _removal_effect_spark_loop(
                 .alias("v"),
             )
         )
-        nxt, h = _checkpoint_tracked(nxt)
+        nxt, h = checkpoint(nxt)
         handle.unpersist()  # superseded round (localCheckpoint is eager)
         handle = h
         v = nxt
@@ -1926,8 +1919,6 @@ def _removal_effect_spark_loop(
             F.expr(f"(removal_effect_ppm * {PPM}) div _tot"),
         ).alias("share_ppm"),
     )
-    _track_release(handle)
-    _track_release(p_h)
     return out
 
 

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from opteryx_spark.operators import dedup, events, retrieval, similarity
+from opteryx_spark.operators.lifetime import persist
 from opteryx_spark.suite import register
 from opteryx_spark.suite._util import t
 from opteryx_spark.suite.pipeline import _O_TOKENS, _PERM_VALUES
@@ -864,9 +865,8 @@ def dedup_bloom_prefilter(spark, sf_dir):
     # (corpus keys -> positions, the exact-dup join, the new-doc side and
     # its bloom probe) and each branch re-ran the regexp_replace+md5 scan
     # of the full corpus.  Persist the 40-byte-per-row key frame once —
-    # the same bounded-lifetime cache every dedup operator uses.
-    D.release_text_group_caches()
-    docs = D._track_persist(
+    # the same scope-owned cache every dedup operator uses.
+    docs = persist(
         t(spark, sf_dir, "documents").select(
             "doc_id", F.md5(T.normalize_text("text")).alias("key")
         )

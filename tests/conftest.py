@@ -39,6 +39,16 @@ def spark():
     yield spark
 
 
+@pytest.fixture(autouse=True)
+def _persist_scope():
+    """Each test owns the caches and checkpoints its operator calls create;
+    they are released when the test ends."""
+    from opteryx_spark.operators.lifetime import persist_scope
+
+    with persist_scope():
+        yield
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_SMALL

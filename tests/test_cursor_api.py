@@ -261,15 +261,14 @@ def test_long_lived_session_storage_stays_flat(spark):
     """100 sequential cursor queries must not accumulate persisted
     storage (VERDICT r3 next-round #10)."""
     import opteryx_spark as ox
-    from opteryx_spark.operators import dedup
 
-    dedup.release_text_group_caches()  # drop any prior test's bounded cache
+    before = len(spark.sparkContext._jsc.getPersistentRDDs())
     conn = ox.connect(spark=spark)
     for i in range(100):
         conn.cursor().execute(
             f"SELECT COUNT(*) AS n FROM $planets WHERE id > {i % 9}"
         ).fetchone()
-    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == 0
+    assert len(spark.sparkContext._jsc.getPersistentRDDs()) == before
 
 
 def test_notebook_magic_registration_gated():

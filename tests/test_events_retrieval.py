@@ -11,6 +11,7 @@ from datetime import datetime
 from pyspark.sql import functions as F
 
 from opteryx_spark.operators import dedup, events, retrieval
+from opteryx_spark.operators.lifetime import persist_scope
 from opteryx_spark.plans import broadcast_join_count, explain_text
 from opteryx_spark.suite import load_all
 
@@ -129,7 +130,6 @@ def test_fuzzy_dedup_keeps_one_per_cluster(spark):
     assert got[3].comp == 1 and not got[3].kept
     assert got[10].comp is None and got[10].kept
     assert got[11].comp is None and got[11].kept  # NULL text: no pairs, kept
-    dedup.release_text_group_caches()
 
 
 # --- plan shapes (the 100 TB properties) -------------------------------------
@@ -374,7 +374,6 @@ def test_connected_components_raises_on_nonconvergence(spark):
     # ...and raises rather than lying when the budget is too small
     with pytest.raises(RuntimeError, match="did not converge"):
         dedup.connected_components(chain, max_iter=2)
-    dedup.release_text_group_caches()
 
 
 def test_hll_portable_error_bound(spark, sf_dir):
@@ -586,7 +585,6 @@ def test_fuzzy_dedup_exemplar_route_equivalence(spark):
     assert exemplar[(30,)] == (None, True) and exemplar[(31,)] == (None, True)
     assert exemplar[(40,)] == (None, True)
     assert exemplar[(None,)] == (None, True)
-    dedup.release_text_group_caches()
 
 
 @pytest.mark.slow  # randomized route-equivalence sweep - full tier only
@@ -618,9 +616,9 @@ def test_fuzzy_dedup_route_equivalence_randomized(spark):
                          "completely unrelated text " * 3]))); next_id += 1
         df = spark.createDataFrame(rows, "doc_id long, text string")
         kw = dict(min_est_jaccard=0.5, k=2, portable_hash=True)
-        a = sorted((r.doc_id, r.comp, r.kept) for r in
-                   dedup.fuzzy_dedup(df, unique_texts=False, **kw).collect())
-        b = sorted((r.doc_id, r.comp, r.kept) for r in
-                   dedup.fuzzy_dedup(df, unique_texts=True, **kw).collect())
+        with persist_scope():  # each trial releases its own caches
+            a = sorted((r.doc_id, r.comp, r.kept) for r in
+                       dedup.fuzzy_dedup(df, unique_texts=False, **kw).collect())
+            b = sorted((r.doc_id, r.comp, r.kept) for r in
+                       dedup.fuzzy_dedup(df, unique_texts=True, **kw).collect())
         assert a == b, f"trial {trial}: member {a} != exemplar {b}"
-        dedup.release_text_group_caches()

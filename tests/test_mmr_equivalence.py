@@ -49,10 +49,6 @@ def test_mmr_greedy_matches_spark_loop_randomized(spark):
         slow = _spark_loop(spark, pool, lam, k)
         assert fast == slow, (trial, lam, k, fast, slow)
 
-    from opteryx_spark.operators.dedup import release_text_group_caches
-
-    release_text_group_caches()
-
 
 def test_mmr_greedy_negative_dots_no_zero_floor(spark):
     # Two opposite vectors: after picking id 0, the dot to id 1 is

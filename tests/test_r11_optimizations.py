@@ -105,7 +105,6 @@ def test_lsh_cosine_pairs_norm_precompute_matches_bruteforce(spark):
     """Persisted-bucket + per-row-norm rewrite: every reported pair's
     cosim equals the sequential-fold cosine recomputed in Python."""
     from opteryx_spark.operators import similarity
-    from opteryx_spark.operators.dedup import release_text_group_caches
 
     rng = random.Random(7)
     rows = [
@@ -115,7 +114,6 @@ def test_lsh_cosine_pairs_norm_precompute_matches_bruteforce(spark):
     got = similarity.lsh_cosine_pairs(
         df, threshold=0.2, bands=2, planes_per_band=2, dim=8, seed=3
     ).collect()
-    release_text_group_caches()
     vecs = {i: v for i, v in rows}
 
     def fold_dot(a, b):
@@ -220,7 +218,6 @@ def test_triplet_mining_persisted_pairs_match_reference(spark):
     Python reference (nearest same-label positive, nearest semi-hard
     negative, id tie-breaks) on a randomized panel."""
     from opteryx_spark.operators import similarity
-    from opteryx_spark.operators.dedup import release_text_group_caches
 
     rng = random.Random(23)
     rows = [
@@ -233,7 +230,6 @@ def test_triplet_mining_persisted_pairs_match_reference(spark):
         r["anchor_id"]: (r["pos_id"], r["pos_d2_q"], r["neg_id"], r["neg_d2_q"])
         for r in similarity.triplet_mining(anchors, df).collect()
     }
-    release_text_group_caches()
 
     import struct as _s
 
@@ -390,7 +386,6 @@ def test_boilerplate_persisted_grams_match_two_pass_reference(spark):
     call) on a corpus with heavy INTRA-doc gram repetition — the case
     that would break if shingles ever stopped deduping per doc."""
     from opteryx_spark.operators import filtering, text
-    from opteryx_spark.operators.dedup import release_text_group_caches
 
     rng = random.Random(23)
     vocab = ["the", "cat", "sat", "mat", "dog", "ran", "big", "red"]
@@ -441,4 +436,3 @@ def test_boilerplate_persisted_grams_match_two_pass_reference(spark):
     assert got.exceptAll(ref).count() == 0 and ref.exceptAll(got).count() == 0
     # at least one gram must actually be hot for the pin to mean anything
     assert got.agg(F.sum("n_hot_grams")).first()[0] > 0
-    release_text_group_caches()

@@ -20,7 +20,6 @@ def test_remove_duplicate_chunks_slim_digest_persisted(spark, sf_dir):
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
     txt = explain_text(dedup.remove_duplicate_chunks(docs, chunk_tokens=16))
     assert "InMemoryRelation" in txt
-    dedup.release_text_group_caches()
 
 
 def test_curate_incremental_delta_scanned_once(spark, sf_dir):
@@ -42,7 +41,6 @@ def test_curate_incremental_delta_scanned_once(spark, sf_dir):
     assert txt.count("GreaterThanOrEqual(doc_id,250)") == 1, txt.count(
         "GreaterThanOrEqual(doc_id,250)"
     )
-    dedup.release_text_group_caches()
 
 
 def test_quality_features_tokenize_staged_once(spark, sf_dir):

@@ -23,7 +23,7 @@ import random
 from pyspark.sql import functions as F
 
 from opteryx_spark.operators import events as _events
-from opteryx_spark.operators.dedup import release_text_group_caches
+from opteryx_spark.operators.lifetime import persist_scope
 
 
 def _spark_route(spark, transitions, rounds):
@@ -31,8 +31,9 @@ def _spark_route(spark, transitions, rounds):
         [(fi, tj, c) for fi, tj, c in transitions],
         "fi string, tj string, c long",
     )
-    rows = _events._removal_effect_spark_loop(counts, rounds).collect()
-    out = sorted(
+    with persist_scope():  # each call releases its own checkpoints
+        rows = _events._removal_effect_spark_loop(counts, rounds).collect()
+    return sorted(
         (
             r.channel,
             r.p_full_ppm,
@@ -42,8 +43,6 @@ def _spark_route(spark, transitions, rounds):
         )
         for r in rows
     )
-    release_text_group_caches()
-    return out
 
 
 def _driver_route(transitions, rounds):
@@ -126,4 +125,3 @@ def test_removal_operator_uses_driver_route_end_to_end(spark):
     # intact-chain probability is the same on every row and positive here
     pf = {r.p_full_ppm for r in got.values()}
     assert len(pf) == 1 and pf.pop() > 0
-    release_text_group_caches()

@@ -244,10 +244,6 @@ def test_triangle_plan_no_cartesian(spark, sf_dir):
     text = explain_text(web.triangle_counts(edges))
     assert "CartesianProduct" not in text
 
-    from opteryx_spark.operators.dedup import release_text_group_caches
-
-    release_text_group_caches()
-
 
 # --- MMR re-ranking --------------------------------------------------------------
 
@@ -273,10 +269,6 @@ def test_mmr_prefers_diverse_over_redundant(spark):
     with pytest.raises(ValueError):
         retrieval.mmr_rerank(df, [1.0, 0.0, 0.0], k=5, candidates=3)
 
-    from opteryx_spark.operators.dedup import release_text_group_caches
-
-    release_text_group_caches()
-
 
 # --- bigram perplexity -----------------------------------------------------------
 
@@ -295,10 +287,6 @@ def test_bigram_perplexity_contract(spark):
     # the repetitive doc's c->c transition is near-certain => low cost
     assert out[4].avg_nll_millinats < out[1].avg_nll_millinats
 
-    from opteryx_spark.operators.dedup import release_text_group_caches
-
-    release_text_group_caches()
-
 
 def test_bigram_perplexity_plan_no_cartesian(spark, sf_dir):
     from opteryx_spark.operators import filtering
@@ -307,10 +295,6 @@ def test_bigram_perplexity_plan_no_cartesian(spark, sf_dir):
     text = explain_text(filtering.bigram_perplexity(docs))
     assert "CartesianProduct" not in text
     assert "rangepartitioning" not in text.lower()
-
-    from opteryx_spark.operators.dedup import release_text_group_caches
-
-    release_text_group_caches()
 
 
 # --- SCD2 / attribution / anomaly plan shapes -------------------------------------

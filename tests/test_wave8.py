@@ -157,7 +157,6 @@ def test_phash_near_dups_planted_duplicates(spark):
     import pytest as _pt
 
     from opteryx_spark.operators import multimodal as mm
-    from opteryx_spark.operators.dedup import release_text_group_caches
 
     rows = [(i, f"content-{i if i % 10 else i - 5}") for i in range(1, 41)]
     docs = spark.createDataFrame(rows, "media_id long, payload string")
@@ -168,12 +167,10 @@ def test_phash_near_dups_planted_duplicates(spark):
     ]
     with _pt.raises(ValueError):
         mm.phash_near_dup_pairs(docs, max_hamming=65)
-    release_text_group_caches()
 
 
 def test_phash_plan_no_cartesian(spark, sf_dir):
     from opteryx_spark.operators import multimodal as mm
-    from opteryx_spark.operators.dedup import release_text_group_caches
 
     docs = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
@@ -182,7 +179,6 @@ def test_phash_plan_no_cartesian(spark, sf_dir):
     text = explain_text(mm.phash_near_dup_pairs(docs))
     assert "CartesianProduct" not in text
     assert "rangepartitioning" not in text.lower()
-    release_text_group_caches()
 
 
 def test_ohlc_stream_matches_batch(spark, sf_dir, tmp_path_factory):
@@ -421,7 +417,6 @@ def test_dau_wau_coverage_semantics(spark):
     import datetime as _dt
 
     from opteryx_spark.operators import events
-    from opteryx_spark.operators.dedup import release_text_group_caches
 
     rows = [
         (1, _dt.datetime(2024, 1, 1, 10), 1, "m", 1.0, None),
@@ -441,7 +436,6 @@ def test_dau_wau_coverage_semantics(spark):
     assert out["2024-01-02"] == (0, 2, 0)
     with pytest.raises(ValueError):
         events.dau_wau_stickiness(ev, window_days=0)
-    release_text_group_caches()
 
 
 def test_fellegi_sunter_weights_and_null_field(spark):
@@ -475,7 +469,6 @@ def test_fellegi_sunter_weights_and_null_field(spark):
 
 def test_market_basket_lift_semantics(spark):
     from opteryx_spark.operators import features
-    from opteryx_spark.operators.dedup import release_text_group_caches
 
     # 4 baskets: {a,b} x3, {a,c} x1 -> conf(a->b)=750000, lift(a->b)
     rows = [
@@ -498,7 +491,6 @@ def test_market_basket_lift_semantics(spark):
     assert out[("c", "a")] == (1, 250000, 1000000, 1000000)
     with pytest.raises(ValueError):
         features.market_basket_rules(df, "b", "i", -1)
-    release_text_group_caches()
 
 
 def test_survival_curve_km_semantics(spark):
@@ -506,7 +498,6 @@ def test_survival_curve_km_semantics(spark):
     import math
 
     from opteryx_spark.operators import events
-    from opteryx_spark.operators.dedup import release_text_group_caches
 
     def day(n):
         return _dt.datetime(2024, 1, 1 + n, 12)
@@ -535,7 +526,6 @@ def test_survival_curve_km_semantics(spark):
     assert (out[30].n_at_risk, out[30].n_churned) == (1, 0)
     assert out[30].log_survival_micronats == want
     assert not out[30].reached_zero
-    release_text_group_caches()
 
 
 def test_benford_audit_known_distribution(spark):
@@ -592,7 +582,6 @@ def test_scd2_current_stream_matches_batch(spark, sf_dir, tmp_path_factory):
 
 def test_rake_keyphrases_scoring(spark):
     from opteryx_spark.operators import text
-    from opteryx_spark.operators.dedup import release_text_group_caches
 
     docs = spark.createDataFrame(
         [
@@ -611,14 +600,12 @@ def test_rake_keyphrases_scoring(spark):
     assert all("of" not in p.split(" ") and "the" not in p.split(" ") for p in out)
     with pytest.raises(ValueError):
         text.rake_keyphrases(docs, top_k=0)
-    release_text_group_caches()
 
 
 def test_seasonal_residuals_removes_weekly_pattern(spark):
     import datetime as _dt
 
     from opteryx_spark.operators import events
-    from opteryx_spark.operators.dedup import release_text_group_caches
 
     rows = []
     eid = 0
@@ -636,7 +623,6 @@ def test_seasonal_residuals_removes_weekly_pattern(spark):
     assert out[7].residual == 45.0  # the spike stands out
     assert out[2].seasonal == 20.0 and out[2].residual == 0.0
     assert out[1].dow == 0 and out[1].hour == 10
-    release_text_group_caches()
 
 
 def test_pq_adc_matches_python_mirror(spark):
@@ -644,7 +630,6 @@ def test_pq_adc_matches_python_mirror(spark):
     import math
 
     from opteryx_spark.operators import similarity
-    from opteryx_spark.operators.dedup import release_text_group_caches
 
     dim, m, codes = 8, 2, 2
     rows = [(i, [((i * 3 + d * 5) % 7) / 7.0 for d in range(dim)]) for i in range(1, 13)]
@@ -681,7 +666,6 @@ def test_pq_adc_matches_python_mirror(spark):
         assert out[rank] == (i, adc)
     with pytest.raises(ValueError):
         similarity.pq_adc_topk(df, query, m=3, dim=8)
-    release_text_group_caches()
 
 
 def test_attribution_stream_matches_batch(spark, sf_dir, tmp_path_factory):
@@ -731,7 +715,6 @@ def test_new_vs_returning_split(spark):
     import datetime as _dt
 
     from opteryx_spark.operators import events
-    from opteryx_spark.operators.dedup import release_text_group_caches
 
     rows = [
         (1, _dt.datetime(2024, 1, 1, 9), 1, "m", 1.0, None),
@@ -747,7 +730,6 @@ def test_new_vs_returning_split(spark):
            for r in events.new_vs_returning(ev).collect()}
     assert out["2024-01-01"] == (2, 0, 1000000)
     assert out["2024-01-02"] == (1, 1, 500000)
-    release_text_group_caches()
 
 
 def test_freshness_check_lag_semantics(spark):
@@ -792,7 +774,6 @@ def test_encoding_issues_counts(spark):
 
 def test_ngram_novelty_first_occurrence_semantics(spark):
     from opteryx_spark.operators import text
-    from opteryx_spark.operators.dedup import release_text_group_caches
 
     docs = spark.createDataFrame(
         [
@@ -813,14 +794,12 @@ def test_ngram_novelty_first_occurrence_semantics(spark):
     assert out[5] == (0, 0, None)
     with pytest.raises(ValueError):
         text.ngram_novelty(docs, k=0)
-    release_text_group_caches()
 
 
 def test_peak_concurrency_sweep(spark):
     import datetime as _dt
 
     from opteryx_spark.operators import events
-    from opteryx_spark.operators.dedup import release_text_group_caches
 
     rows = [
         # u1 session 09:00-09:10, u2 session 09:05-09:20 -> overlap peak 2
@@ -840,4 +819,3 @@ def test_peak_concurrency_sweep(spark):
            for r in events.peak_concurrency(ev).collect()}
     assert out["2024-01-01"] == (2, 3)
     assert out["2024-01-02"] == (1, 1)
-    release_text_group_caches()
